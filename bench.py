@@ -333,7 +333,7 @@ def _manifest_bench(spark, extracted_path: str, workdir: str) -> dict:
     file-list collect + second job) outweighs skipping 29 file opens —
     the committed row contradicted the data-skipping claim it existed to
     support. Skipping is a big-table feature: this bench now ALSO lays
-    the same rows out at 128 and 512 files (repartitionByRange on url +
+    the same rows out at 512 and 2048 files (repartitionByRange on url +
     in-file url sort — the write_extracted layout contract) and reports
     the speedup at each point plus the measured crossover file count, so
     the artifact states exactly where pruning starts to pay. At 10^12

@@ -4,29 +4,22 @@ P1: ``url_bucket = pmod(xxhash64(url), B)`` — the Iceberg ``bucket(B, url)``
 transform emulated with Spark built-ins (no Iceberg jars offline, SURVEY
 §0.1); swap-in point for real Iceberg DDL is sources.io.TableFormat.
 
-P2: hot hosts (by row share) get a salt column so one mega-host fans out
-across S kernel tasks. AQE's skew split only rebalances shuffle *reads*;
-compute skew inside the Python kernel stage needs this explicit salt
-(BASELINE.json:6 "salted repartitioning for skewed hosts"). The hot-host set
-is found with one cheap aggregate on the (pruned) url column and broadcast
-as a literal isin() — no join on the big side.
+P2: every row gets a salt ``pmod(xxhash64(url, seed), S)``, so one
+mega-host fans out across S kernel tasks. AQE's skew split only rebalances
+shuffle *reads*; compute skew inside the Python kernel stage needs this
+explicit salt (BASELINE.json:6 "salted repartitioning for skewed hosts").
+Salting is universal and url-hashed: no hot-host probe decides who gets it,
+so it costs no job.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
 DEFAULT_BUCKETS = 64
 DEFAULT_SALT = 64  # kernel shuffle keys = B×S; keys ≫ partitions => balance
-
-def host_expr(url_col: str = "url"):
-    return F.lower(
-        F.regexp_extract(
-            F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)", 1
-        )
-    )
 
 
 def with_url_bucket(df: DataFrame, b: int = DEFAULT_BUCKETS, url_col: str = "url") -> DataFrame:
@@ -35,34 +28,7 @@ def with_url_bucket(df: DataFrame, b: int = DEFAULT_BUCKETS, url_col: str = "url
     )
 
 
-def hot_hosts(pages: DataFrame, hot_frac: float = 0.05, max_hosts: int = 64) -> List[str]:
-    """Hosts owning more than ``hot_frac`` of rows. ONE job over the pruned
-    url column: per-host counts plus the grand total via a window over the
-    (tiny) aggregated relation — not a separate count() pass over the
-    table, which would double the scan at 10^12 rows."""
-    counts = (
-        pages.select(host_expr().alias("host"))
-        .groupBy("host")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    from pyspark.sql.window import Window
-
-    rows = (
-        counts.withColumn("total", F.sum("n").over(Window.partitionBy()))
-        .where(F.col("n") > F.col("total") * hot_frac)
-        .orderBy(F.desc("n"))
-        .limit(max_hosts)
-        .collect()
-    )
-    return [r["host"] for r in rows if r["host"]]
-
-
-def with_salt(
-    df: DataFrame,
-    hot: Optional[List[str]] = None,
-    s: int = DEFAULT_SALT,
-    url_col: str = "url",
-) -> DataFrame:
+def with_salt(df: DataFrame, s: int = DEFAULT_SALT, url_col: str = "url") -> DataFrame:
     """Universal url-derived salt ∈ [0, S) (deterministic, uniform per url).
 
     This generalizes hot-host-only salting (P2): any skewed host's pages
@@ -70,8 +36,8 @@ def with_salt(
     the kernel shuffle gets B×S keys instead of B — with keys ≫ partitions,
     key→partition hash collisions average out (Poisson balance ±1/√(keys/P))
     instead of producing the 2-3×-loaded straggler partitions measured with
-    keys == partitions. The ``hot`` list is retained for lineage/reporting;
-    s <= 1 disables salting (the skew-equivalence test's control arm)."""
+    keys == partitions. s <= 1 disables salting (the skew-equivalence
+    test's control arm)."""
     if s <= 1:
         return df.withColumn("salt", F.lit(0))
     salt = F.pmod(F.xxhash64(F.col(url_col), F.lit("salt-seed-1")), F.lit(s)).cast("int")

@@ -3,7 +3,7 @@
 Plan shape (one Python stage by design, SURVEY §4):
 
   scan(pages | WARC dumps via sources.warc) ──filter (pushed to Parquet)──▶
-  dedupe latest-wins (partial-agg max(struct)) ──▶ bucket P1 + salt P2 ──▶
+  dedupe latest-wins (partial-agg max(struct)) ──▶ bucket P1 + url salt P2 ──▶
   shuffle on (url_bucket, salt) ──▶ mapInArrow kernel E17 ──▶
   re-derive url_bucket (JVM) ──▶ bucketed dynamic-overwrite write S3 ──▶
   lineage rollup from the committed table ──▶ append lineage S4
@@ -26,16 +26,18 @@ from corsearch_project_spark.operators.kernel import run_kernel
 from corsearch_project_spark.operators.partitioning import (
     DEFAULT_BUCKETS,
     DEFAULT_SALT,
-    hot_hosts,
     with_salt,
     with_url_bucket,
 )
 from corsearch_project_spark.sources.io import (
     ParquetBucketedFormat,
     done_buckets,
+    local_frame,
     scan_pages,
 )
 from corsearch_project_spark.sources.lineage import lineage_rows
+from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
+from corsearch_project_spark.sources.snapshots import append_snapshot
 from corsearch_project_spark.webextract.rules import Rule, rules_to_plain
 
 
@@ -47,7 +49,6 @@ class ExtractConfig:
     input_format: str = "pages"  # 'pages' (parquet table) | 'warc' (raw dumps)
     buckets: int = DEFAULT_BUCKETS
     salt: int = DEFAULT_SALT
-    hot_frac: float = 0.05
     resume: bool = False
     kernel_partitions: Optional[int] = None
     bucket_whitelist: Optional[Sequence[int]] = None  # test hook: simulate partial run
@@ -175,20 +176,12 @@ def run_extract(
     if cfg.bucket_whitelist is not None:
         pages = pages.where(F.col("url_bucket").isin(list(cfg.bucket_whitelist)))
 
-    # Hot-host detection runs on the PRE-dedupe relation: projecting just
-    # `url` lets Parquet skip the fat `html` binary column entirely, and
-    # avoids paying the dedupe window's shuffle twice. Re-crawl duplicates
-    # inflate per-host counts slightly, which only makes the skew heuristic
-    # more conservative — exactly what we want from a skew detector.
-    hot = hot_hosts(pages.select("url"), cfg.hot_frac)
-    mark("hot_hosts")
-
     # Project BEFORE deduping: max(struct) packs every input column into the
     # aggregate, which defeats Catalyst's column pruning through the agg —
     # an explicit projection here is what keeps unused columns (lang) out of
     # the Parquet scan (asserted by test_plans' ReadSchema audit).
     pages = dedupe_latest(pages.select("url", "warc_ts", "html", "text", "url_bucket"))
-    pages = with_salt(pages, hot, cfg.salt)
+    pages = with_salt(pages, cfg.salt)
 
     sel = pages.select("url", "html", "text", "url_bucket", "salt")
     part_cols = [F.col("url_bucket"), F.col("salt")]
@@ -254,26 +247,19 @@ def run_extract(
     lin_all = lineage_rows(committed, cfg.run_id, cfg.input_path).collect()
     mark("lineage_rollup")
     skipped_set = set(skipped)
-    new_rows = [r for r in lin_all if r["url_bucket"] not in skipped_set]
+    new_rows = [r.asDict() for r in lin_all if r["url_bucket"] not in skipped_set]
     run_buckets = sorted(r["url_bucket"] for r in new_rows)
-    if new_rows:
-        from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
-
-        fmt.append_lineage(
-            spark.createDataFrame(new_rows, LINEAGE_SCHEMA).coalesce(1),
-            cfg.lineage_path,
-        )
-
     snap = None
     if new_rows:
-        from corsearch_project_spark.sources.snapshots import append_snapshot
-
+        fmt.append_lineage(
+            local_frame(spark, new_rows, LINEAGE_SCHEMA), cfg.lineage_path
+        )
         snap = append_snapshot(
             spark,
             cfg.snapshots_path,
             cfg.run_id,
             "resume-append" if cfg.resume else "overwrite",
-            [r.asDict() for r in new_rows],
+            new_rows,
         )
     mark("lineage_append")
     return {
@@ -282,7 +268,6 @@ def run_extract(
         "phase_wall_s": phases,
         "buckets_written": run_buckets,
         "buckets_skipped": skipped,
-        "hot_hosts": hot,
         "docs_out": sum(r["doc_count"] for r in new_rows),
         "extracted_path": cfg.extracted_path,
         "lineage_path": cfg.lineage_path,

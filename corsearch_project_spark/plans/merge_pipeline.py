@@ -39,18 +39,20 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from corsearch_project_spark.operators.kernel import run_kernel
-from corsearch_project_spark.operators.partitioning import (
-    hot_hosts,
-    with_salt,
-    with_url_bucket,
-)
+from corsearch_project_spark.operators.partitioning import with_salt, with_url_bucket
 from corsearch_project_spark.plans.extract_pipeline import (
     DEFAULT_BUCKETS,
     DEFAULT_SALT,
     dedupe_latest,
 )
-from corsearch_project_spark.sources.io import ParquetBucketedFormat, scan_pages
+from corsearch_project_spark.sources.io import (
+    ParquetBucketedFormat,
+    local_frame,
+    scan_pages,
+)
 from corsearch_project_spark.sources.lineage import lineage_rows
+from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
+from corsearch_project_spark.sources.snapshots import append_snapshot
 from corsearch_project_spark.webextract.rules import Rule, rules_to_plain
 
 
@@ -62,7 +64,6 @@ class MergeConfig:
     input_format: str = "pages"  # 'pages' | 'warc'
     buckets: int = DEFAULT_BUCKETS
     salt: int = DEFAULT_SALT
-    hot_frac: float = 0.05
     kernel_partitions: Optional[int] = None
     max_records_per_file: int = 50_000
 
@@ -122,9 +123,8 @@ def run_merge(
         inc = scan_pages(spark, cfg.increment_path)
 
     inc = with_url_bucket(inc, cfg.buckets)
-    hot = hot_hosts(inc.select("url"), cfg.hot_frac)
     inc = dedupe_latest(inc.select("url", "warc_ts", "html", "text", "url_bucket"))
-    inc = with_salt(inc, hot, cfg.salt)
+    inc = with_salt(inc, cfg.salt)
     sel = inc.select("url", "html", "text", "url_bucket", "salt")
     n_kernel = cfg.kernel_partitions or max(
         cfg.buckets, 2 * spark.sparkContext.defaultParallelism
@@ -195,23 +195,14 @@ def run_merge(
     committed = fmt.read_extracted(spark, cfg.extracted_path).where(
         F.col("url_bucket").isin(ch_buckets)
     )
-    lin = lineage_rows(
-        committed, cfg.run_id, cfg.increment_path, buckets=ch_buckets
-    ).collect()
-    from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
-
-    fmt.append_lineage(
-        spark.createDataFrame(lin, LINEAGE_SCHEMA).coalesce(1), cfg.lineage_path
-    )
-    from corsearch_project_spark.sources.snapshots import append_snapshot
-
-    snap = append_snapshot(
-        spark,
-        cfg.snapshots_path,
-        cfg.run_id,
-        "merge-increment",
-        [r.asDict() for r in lin],
-    )
+    lin = [
+        r.asDict()
+        for r in lineage_rows(
+            committed, cfg.run_id, cfg.increment_path, buckets=ch_buckets
+        ).collect()
+    ]
+    fmt.append_lineage(local_frame(spark, lin, LINEAGE_SCHEMA), cfg.lineage_path)
+    snap = append_snapshot(spark, cfg.snapshots_path, cfg.run_id, "merge-increment", lin)
     mark("lineage_append")
     new_ext.unpersist()
     changed.unpersist()

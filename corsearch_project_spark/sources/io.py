@@ -13,9 +13,9 @@ pipeline.
 from __future__ import annotations
 
 import os
-from typing import List, Optional, Sequence
+from typing import List, Mapping, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from corsearch_project_spark.sources.schemas import (
     EXTRACTED_SCHEMA,
@@ -29,6 +29,39 @@ def scan_pages(spark: SparkSession, path: str) -> DataFrame:
     caller filters on url_bucket (bucketed layout) or lang/warc_ts (row-group
     min/max skip)."""
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
+
+
+def local_frame(
+    spark: SparkSession, rows: List[Mapping], schema: T.StructType
+) -> DataFrame:
+    """A one-partition DataFrame of a few driver-side rows (lineage and
+    snapshot ledger rows), built from Arrow so Spark plans it as a JVM-only
+    ``LocalTableScan``. Pickled rows would become a Python RDD
+    (``Scan ExistingRDD``) whose one-task write job must start a Python
+    worker just to unpickle them. The Arrow schema is derived from
+    ``schema``, so the written files keep its types and ``not null`` flags."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
+def read_table_or_none(
+    spark: SparkSession, path: str, schema: T.StructType
+) -> Optional[DataFrame]:
+    """A metadata table read with a fixed schema, or None when its path does
+    not exist yet (the first commit to a fresh table root). Every other
+    failure propagates."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        msg = str(e)
+        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+            return None
+        raise
 
 
 def scan_pages_bucketed(spark: SparkSession, path: str) -> DataFrame:
@@ -77,10 +110,9 @@ class ParquetBucketedFormat:
         df.write.mode("append").parquet(path)
 
     def read_lineage(self, spark: SparkSession, path: str) -> Optional[DataFrame]:
-        try:
-            return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-        except Exception:
-            return None
+        """A corrupt lineage table raises instead of reading as empty, which
+        would make ``--resume`` silently rerun every bucket."""
+        return read_table_or_none(spark, path, LINEAGE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -140,7 +140,16 @@ def _swap_in(new_dir: str, live_dir: str, fs=LOCAL_FS) -> None:
     directory at all times. Single-writer per table root is assumed; on an
     object store each rename is a non-atomic prefix copy+delete, which the
     same single-writer assumption covers.
+
+    A ``new_dir`` without ``COMPLETE_MARKER`` raises before anything moves:
+    ``recover_swap`` would take the swapped-in ledger for a torn copy
+    forever after.
     """
+    if not _complete(new_dir, fs):
+        raise RuntimeError(
+            f"{new_dir} was written without its {COMPLETE_MARKER} marker; ledger "
+            "swaps need mapreduce.fileoutputcommitter.marksuccessfuljobs=true"
+        )
     aside = live_dir.rstrip("/") + ASIDE_SUFFIX
     if fs.exists(aside):
         fs.rmtree(aside)

@@ -25,6 +25,8 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from corsearch_project_spark.sources.io import local_frame, read_table_or_none
+
 SNAPSHOT_SCHEMA = T.StructType(
     [
         T.StructField("seq", T.LongType(), False),
@@ -73,9 +75,7 @@ def append_snapshot(
         "bytes_in": sum(int(r["bytes_in"]) for r in lineage_rows),
         "rollup_xor": _xor_hex([r["sha256_rollup"] for r in lineage_rows]),
     }
-    spark.createDataFrame([snap], SNAPSHOT_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
+    local_frame(spark, [snap], SNAPSHOT_SCHEMA).write.mode("append").parquet(path)
     return snap
 
 
@@ -86,12 +86,5 @@ def read_snapshots(spark: SparkSession, path: str) -> Optional[DataFrame]:
     table); a corrupted or unreadable snapshots table must PROPAGATE —
     swallowing it would silently restart seq at 0 and write a conflicting
     ledger row."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(SNAPSHOT_SCHEMA).parquet(path).orderBy("seq")
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        raise
+    df = read_table_or_none(spark, path, SNAPSHOT_SCHEMA)
+    return None if df is None else df.orderBy("seq")

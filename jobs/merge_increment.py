@@ -33,7 +33,6 @@ def main(argv=None) -> int:
     ap.add_argument("--run-id", default="")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--salt", type=int, default=8)
-    ap.add_argument("--hot-frac", type=float, default=0.05)
     ap.add_argument("--kernel-partitions", type=int, default=None)
     ap.add_argument("--master", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
@@ -66,7 +65,6 @@ def main(argv=None) -> int:
         input_format=args.input_format,
         buckets=args.buckets,
         salt=args.salt,
-        hot_frac=args.hot_frac,
         kernel_partitions=args.kernel_partitions,
     )
     import time

@@ -33,7 +33,6 @@ def main(argv=None) -> int:
     ap.add_argument("--run-id", default="")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--salt", type=int, default=8)
-    ap.add_argument("--hot-frac", type=float, default=0.05)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--with-markdown", action="store_true",
                     help="also emit (extracted_md, md_sha256) columns via "
@@ -73,7 +72,6 @@ def main(argv=None) -> int:
         run_id=args.run_id,
         buckets=args.buckets,
         salt=args.salt,
-        hot_frac=args.hot_frac,
         resume=args.resume,
         kernel_partitions=args.kernel_partitions,
         with_markdown=args.with_markdown,

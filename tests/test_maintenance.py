@@ -456,3 +456,24 @@ def test_recover_swap_prefers_complete_ledger_over_partial_live(tmp_path):
     acts2 = recover_swap(str(live2), fs=_CrashableObjectStoreFS())
     assert acts2 == ["unrecoverable_both_partial"]
     assert live2.exists() and aside2.exists()
+
+
+def test_swap_in_refuses_markerless_ledger(tmp_path):
+    """A compact ledger written without _SUCCESS (marksuccessfuljobs off)
+    must fail the swap loudly, before the live ledger is touched."""
+    import pytest
+
+    from corsearch_project_spark.sources.maintenance import COMPACT_SUFFIX, _swap_in
+
+    live = tmp_path / "snapshots"
+    live.mkdir()
+    (live / "part-00000.parquet").write_bytes(b"OLD")
+    (live / "_SUCCESS").write_bytes(b"")
+    compact = tmp_path / ("snapshots" + COMPACT_SUFFIX)
+    compact.mkdir()
+    (compact / "part-00000.parquet").write_bytes(b"NEW")
+
+    with pytest.raises(RuntimeError, match="marksuccessfuljobs"):
+        _swap_in(str(compact), str(live), fs=_CrashableObjectStoreFS())
+    assert (live / "part-00000.parquet").read_bytes() == b"OLD"
+    assert (compact / "part-00000.parquet").exists()

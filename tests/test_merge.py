@@ -80,6 +80,11 @@ def test_merge_equals_full_run(spark, tmp_path):
     assert rep["docs_updated"] == 10
     assert rep["docs_unchanged"] == 0
 
+    # one lineage row per rewritten bucket, and the snapshot names the same set
+    lin = spark.read.parquet(os.path.join(out_a, "lineage")).where(F.col("run_id") == "M1")
+    assert sorted(r["url_bucket"] for r in lin.collect()) == rep["buckets_rewritten"]
+    assert rep["snapshot"]["buckets"] == rep["buckets_rewritten"]
+
     # reference: one full run over the merged logical input
     merged_rows = {r["url"]: r for r in base}
     for r in increment:

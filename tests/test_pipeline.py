@@ -133,13 +133,11 @@ def test_skew_salting_preserves_output(spark, tmp_path):
     inp = _write_pages(spark, tmp_path, rows, "pages_skew")
 
     salted = ExtractConfig(input_path=inp, output_path=os.path.join(str(tmp_path), "s1"),
-                           run_id="s1", buckets=8, salt=8, hot_frac=0.05)
+                           run_id="s1", buckets=8, salt=8)
     unsalted = ExtractConfig(input_path=inp, output_path=os.path.join(str(tmp_path), "s2"),
-                             run_id="s2", buckets=8, salt=1, hot_frac=1.1)  # no host is 'hot'
-    r1 = run_extract(spark, salted, rules)
-    r2 = run_extract(spark, unsalted, rules)
-    assert r1["hot_hosts"], "heavy-skew fixture should trigger hot-host detection"
-    assert not r2["hot_hosts"]
+                             run_id="s2", buckets=8, salt=1)
+    run_extract(spark, salted, rules)
+    run_extract(spark, unsalted, rules)
 
     a = {(r["url"], r["text_sha256"])
          for r in spark.read.parquet(salted.extracted_path).select("url", "text_sha256").collect()}
@@ -238,3 +236,66 @@ def test_read_snapshots_missing_vs_corrupt(spark, tmp_path):
         df = read_snapshots(spark, str(bad))
         assert df is not None  # must not be swallowed into the None arm
         df.collect()  # corruption surfaces at scan time at the latest
+
+
+def test_done_buckets_missing_vs_corrupt_lineage(spark, tmp_path):
+    """Missing lineage -> nothing done (fresh table); a truncated lineage
+    file must raise instead of reading as empty, which would make --resume
+    silently rerun every bucket."""
+    import glob
+
+    from corsearch_project_spark.sources.io import (
+        ParquetBucketedFormat,
+        done_buckets,
+        local_frame,
+    )
+    from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
+
+    fmt = ParquetBucketedFormat()
+    assert done_buckets(spark, fmt, str(tmp_path / "nope"), "r") == []
+
+    lin = str(tmp_path / "lineage")
+    row = {"run_id": "r", "url_bucket": 3, "input_split": "x#bucket=3", "doc_count": 1,
+           "sha256_rollup": "0" * 64, "status": "done", "wall_ms": 1, "bytes_in": 1}
+    fmt.append_lineage(local_frame(spark, [row], LINEAGE_SCHEMA), lin)
+    assert done_buckets(spark, fmt, lin, "r") == [3]
+
+    (part,) = glob.glob(os.path.join(lin, "*.parquet"))
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+    with pytest.raises(Exception):
+        done_buckets(spark, fmt, lin, "r")
+
+
+def test_metadata_rows_are_local_and_keep_file_schema(spark, tmp_path):
+    """Lineage and snapshot rows are written from a JVM-local Arrow frame
+    (LocalTableScan, no Python RDD), and the Parquet files keep the schema
+    that pickled rows wrote: same names, types and not-null flags."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from corsearch_project_spark.sources.io import local_frame
+    from corsearch_project_spark.sources.schemas import LINEAGE_SCHEMA
+    from corsearch_project_spark.sources.snapshots import SNAPSHOT_SCHEMA
+
+    inp = _write_pages(spark, tmp_path, gen_pages(40, seed=13))
+    out = os.path.join(str(tmp_path), "out")
+    rep = run_extract(spark, ExtractConfig(input_path=inp, output_path=out,
+                                           run_id="L1", buckets=4))
+
+    def fields(path):
+        return [(f.name, f.type, f.nullable) for f in pq.read_schema(path)]
+
+    lin_rows = [r.asDict() for r in spark.read.parquet(rep["lineage_path"]).collect()]
+    for name, schema, rows in (("lineage", LINEAGE_SCHEMA, lin_rows),
+                               ("snapshots", SNAPSHOT_SCHEMA, [rep["snapshot"]])):
+        ref = os.path.join(str(tmp_path), "ref_" + name)
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(ref)
+        got = sorted(glob.glob(os.path.join(out, name, "*.parquet")))
+        (want,) = glob.glob(os.path.join(ref, "*.parquet"))
+        assert len(got) == 1
+        assert fields(got[0]) == fields(want), name
+
+        plan = local_frame(spark, rows, schema)._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

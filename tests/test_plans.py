@@ -108,7 +108,6 @@ def test_pipeline_has_exactly_one_python_stage_and_pruned_kernel_input(spark, tm
                 "url", "warc_ts", "html", "text", "url_bucket"
             )
         ),
-        None,
         8,
     )
     shuffled = repartition_for_kernel(

@@ -20,6 +20,23 @@ def test_entry_smoke(spark):
     assert set(E.queries()) >= set(E.oracle_sql())
 
 
+def test_coverage_header_query_count_matches_registry():
+    """COVERAGE.md's status header states the registered-query count; it
+    must not drift from the registry."""
+    import os
+    import re
+
+    from corsearch_project_spark.queries import spark_queries
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "COVERAGE.md")
+    with open(path) as f:
+        header = f.read().split("\n\n", 2)[1]
+    m = re.search(r"(\d+) registered queries", header)
+    assert m, "COVERAGE.md status header lost its registered-query count"
+    assert int(m.group(1)) == len(spark_queries())
+
+
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_parity(spark, name, _duck=[]):
     if not _duck:
